@@ -39,82 +39,22 @@ def entry(spark: SparkSession) -> DataFrame:
 # tests/test_oracle_parity.py (all oracled entries) at sf0.001, and by
 # the sf0.01 sweep (`make parity-sf001 parity-sf01`).
 #
-# Round-16 window (executes the r15 verdict's pinned rotation — the
-# red test_horizon_holds tripwire after CORRECTNESS_r15.json landed):
-# positions 1-32 are the 32 forced r11 leftovers (pinned in
-# docs/OPERATORS.md since r15, named by the tripwire; several of them —
-# funnel, sliding_distinct, open_interval_sweep — were ALSO restructured
-# this round, so rules 1 and the forcing coincide); positions 33-47 are
-# rule 1 — every declared entry whose Spark-side computation was
-# restructured by this optimization round and not already forced (the
-# minhash-posting-checkpoint consumers, the basket/recall/stats
-# restructures, the drain whose state partitioning changed); positions
-# 48-50 are the 3 oldest r12 rows (rule 3; no promotions this round, so
-# rule 2 is vacuous). Catalog 232 → horizon stays ceil(232/50) = 5
-# rounds. After the window: the remaining r12 rows (due r17 — their
-# last green row 12 sits exactly on this round's floor), then r13-,
-# r14-green, and the r15 window rows (newest last).
+# Round-17 window (executes the r17 rotation — the red
+# test_horizon_holds tripwire after CORRECTNESS_r16.json landed):
+# positions 1-39 are the 39 forced r12 rows (last green row 12, below
+# this round's floor of 13); position 40 is rule 1 —
+# docs_perplexity_buckets, whose score frame moved from .persist() to an
+# eager localCheckpoint this round; positions 41-50 are the first 10 r13
+# rows in list order (rule 3; no promotions this round, so rule 2 is
+# vacuous). The plan/state block locator was also rewritten this round,
+# but tests/test_jsonpos.py proves its output identical to the previous
+# line scan on every input it covers, so no terraform entry takes a
+# rule-1 slot. Catalog 232 → horizon stays ceil(232/50) = 5 rounds.
+# After the window: the remaining 37 r13 rows (due r18), then r14-,
+# r15-green, and the r16 window rows (newest last).
 _VALIDATE_FIRST = [
-    # -- r16 window: the 32 forced r11 leftovers (pinned in
-    # docs/OPERATORS.md since r15) --
-    "q_customer_skyline",
-    "q_customer_supplier_pagerank",
-    "q_events_anomaly",
-    "q_events_countmin",
-    "q_events_cusum",
-    "q_events_ewma",
-    "q_events_funnel",
-    "q_events_hourly_gapfill",
-    "q_events_mad_outliers",
-    "q_events_ohlc",
-    "q_events_retention_cohorts",
-    "q_events_sliding_distinct_users",
-    "q_events_theil_sen",
-    "q_events_time_weighted_value",
-    "q_events_trailing_30min",
-    "q_events_transitions",
-    "q_events_trend",
-    "q_kmv_distinct",
-    "q_kmv_set_ops",
-    "q_orders_incremental_rollup",
-    "q_orders_open_interval_sweep",
-    "q_orders_price_histogram",
-    "q_partition_pruned_join",
-    "q_quantile_bottomk_sketch",
-    "q_salted_skew_join",
-    "q_unpivot_priority_counts",
-    "q_user_scd2_segments",
-    "q_zorder_pruned_scan",
-    "stream_click_error_left_join",
-    "tf_resource_reference_graph",
-    "tf_sensitive_output_audit",
-    "tf_tags_inheritance_audit",
-    # -- r16 window: rule 1 — entries whose Spark-side computation was
-    # restructured this optimization round (a stale green row proves
-    # nothing about them): the minhash-family consumers of the new
-    # posting checkpoint, the basket/recall/stats restructures, and
-    # the drain whose state partitioning changed --
-    "dedup_minhash_lsh",
-    "dedup_clusters",
-    "docs_curation_pipeline",
-    "docs_leakage_safe_split",
-    "q_basket_brand_lift",
-    "emb_ivf_recall",
-    "q_events_stickiness",
-    "q_bloom_semi_join",
-    "q_events_overdispersion",
-    "q_lineitem_kruskal_wallis",
-    "q_dq_audit",
-    "stream_click_error_full_join",
-    "dedup_golden_record",
-    "dedup_linkage_clusters",
-    "dedup_lsh_recall",
-    # -- r16 window: rule 3 fill — the 3 oldest r12 rows --
-    "q_events_bitmap_distinct_users",
-    "q_lineitem_flag_status_chi2",
-    "tf_unused_locals",
-    # ---- 50-entry window boundary ----
-    # -- last driver row r12 (remainder; due r17) --
+    # -- r17 window: the 39 forced r12 rows (named by the red
+    # test_horizon_holds tripwire after CORRECTNESS_r16 landed) --
     "emb_mmr_rerank",
     "stream_hourly_topk_types",
     "docs_bpe_merge_pairs",
@@ -154,6 +94,10 @@ _VALIDATE_FIRST = [
     "q_orders_cohort_ltv",
     "q_orders_equidepth_histogram",
     "q_orders_interval_merge",
+    # -- r17 window: rule 1 — the perplexity-buckets score frame moved
+    # from .persist() to an eager localCheckpoint this round --
+    "docs_perplexity_buckets",
+    # -- r17 window: rule 3 fill — the first 10 r13 rows in list order --
     "tf_lifecycle_audit",
     "tf_legacy_interpolation_audit",
     "q_lineitem_mannwhitney_u",
@@ -164,6 +108,9 @@ _VALIDATE_FIRST = [
     "q_part_kcore",
     "q_part_triangles",
     "q_session_incident_overlap",
+    # ---- 50-entry window boundary ----
+    # -- then by last green CORRECTNESS row: r13 (remainder; due r18),
+    # r14, r15, and the r16 window (newest last) --
     "q_stats_by_returnflag",
     "q_user_entropy",
     "q_user_segment_asof_snapshot",
@@ -248,7 +195,6 @@ _VALIDATE_FIRST = [
     "q1_pricing_summary",
     "q3_shipping_priority",
     "tf_variable_hygiene",
-    "docs_perplexity_buckets",
     "stream_docs_pipeline_funnel",
     "emb_ann_recall_curve",
     "docs_dedup_rate_report",
@@ -297,6 +243,56 @@ _VALIDATE_FIRST = [
     "q11_important_parts",
     "q2_min_cost_supplier",
     "q_customer_pareto",
+    "q_customer_skyline",
+    "q_customer_supplier_pagerank",
+    "q_events_anomaly",
+    "q_events_countmin",
+    "q_events_cusum",
+    "q_events_ewma",
+    "q_events_funnel",
+    "q_events_hourly_gapfill",
+    "q_events_mad_outliers",
+    "q_events_ohlc",
+    "q_events_retention_cohorts",
+    "q_events_sliding_distinct_users",
+    "q_events_theil_sen",
+    "q_events_time_weighted_value",
+    "q_events_trailing_30min",
+    "q_events_transitions",
+    "q_events_trend",
+    "q_kmv_distinct",
+    "q_kmv_set_ops",
+    "q_orders_incremental_rollup",
+    "q_orders_open_interval_sweep",
+    "q_orders_price_histogram",
+    "q_partition_pruned_join",
+    "q_quantile_bottomk_sketch",
+    "q_salted_skew_join",
+    "q_unpivot_priority_counts",
+    "q_user_scd2_segments",
+    "q_zorder_pruned_scan",
+    "stream_click_error_left_join",
+    "tf_resource_reference_graph",
+    "tf_sensitive_output_audit",
+    "tf_tags_inheritance_audit",
+    "dedup_minhash_lsh",
+    "dedup_clusters",
+    "docs_curation_pipeline",
+    "docs_leakage_safe_split",
+    "q_basket_brand_lift",
+    "emb_ivf_recall",
+    "q_events_stickiness",
+    "q_bloom_semi_join",
+    "q_events_overdispersion",
+    "q_lineitem_kruskal_wallis",
+    "q_dq_audit",
+    "stream_click_error_full_join",
+    "dedup_golden_record",
+    "dedup_linkage_clusters",
+    "dedup_lsh_recall",
+    "q_events_bitmap_distinct_users",
+    "q_lineitem_flag_status_chi2",
+    "tf_unused_locals",
 ]
 
 

@@ -11963,11 +11963,15 @@ def tf_variable_hygiene(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (appId, corpus digest) -> persisted per-doc NLL score frame — the
+# (appId, corpus digest) -> checkpointed per-doc NLL score frame — the
 # perplexity-buckets entry reads it twice (sketch feed, then bucket
-# assignment); persisting makes both passes share ONE execution of the
-# bigram-LM chain, in-session (the production analog: checkpoint the
-# score table between the passes). test_entry_caches pins the reuse.
+# assignment); the eager localCheckpoint makes both passes, and every
+# repeat invocation, share ONE execution of the bigram-LM chain,
+# in-session. localCheckpoint, NOT .persist(): once an earlier call had
+# materialized a persisted frame, its cached relation printed both the
+# final and the initial adaptive LM plan inside this entry's executed
+# plan (9 Window nodes instead of 5), so the pinned plan depended on
+# test order. test_entry_caches pins the reuse.
 _PPL_SCORE_CACHE: dict = {}
 
 
@@ -11980,7 +11984,7 @@ def _ppl_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(
                 "CAST(floor(-mean_logprob * 10000 + 0.5) AS BIGINT)"
             ).alias("nll_e4"),
-        ).persist()
+        ).localCheckpoint(eager=True)
     return _PPL_SCORE_CACHE[key]
 
 
@@ -12032,7 +12036,7 @@ def docs_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the score pass is docs_bigram_logprob's vocab-sized joins;
     the sketch feed and the assignment both read it, so the entry
-    PERSISTS the per-doc score frame per (session, corpus) — one
+    CHECKPOINTS the per-doc score frame per (session, corpus) — one
     execution of the LM chain serves both passes (the production
     analog: checkpoint the score table between them); everything after
     is sketch-sized — the bounded-error escape from rank-tertiles'

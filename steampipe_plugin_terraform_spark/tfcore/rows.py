@@ -86,14 +86,16 @@ class TerraformBuildError(ValueError):
     fails the whole scan in these cases; callers may choose to skip)."""
 
 
-def is_terraform_plan(text: str) -> bool:
-    """Plan sniff: JSON with resource_changes + format_version keys
-    (utils.go:360-372)."""
+def sniff_plan(text: str) -> dict[str, Any] | None:
+    """Plan sniff: the parsed document if ``text`` is JSON with
+    resource_changes + format_version keys (utils.go:360-372), else None."""
     try:
         data = json.loads(text)
     except (ValueError, TypeError):
-        return False
-    return isinstance(data, dict) and "resource_changes" in data and "format_version" in data
+        return None
+    if isinstance(data, dict) and "resource_changes" in data and "format_version" in data:
+        return data
+    return None
 
 
 def _nz_str(v: str | None) -> str | None:
@@ -424,11 +426,14 @@ def _variable_fields(row: dict, name: str, body: dict) -> None:
 # ---------------------------------------------------------------------------
 
 
-def _plan_rows(path: str, text: str) -> Iterable[dict[str, Any]]:
+def _load_plan(text: str) -> Any:
     try:
-        data = json.loads(text)
+        return json.loads(text)
     except (ValueError, TypeError) as e:
         raise TerraformBuildError(f"failed to unmarshal the plan file content: {e}") from e
+
+
+def _plan_rows(path: str, text: str, data: Any) -> Iterable[dict[str, Any]]:
     resources = (((data or {}).get("planned_values") or {}).get("root_module") or {}).get("resources") or []
     for r in resources:
         row = _empty_row("terraform_resource", path)
@@ -548,8 +553,10 @@ def build_rows_for_file(path: str, kind: str, text: str) -> list[dict[str, Any]]
     """
     if kind == "state":
         rows, eff = list(_state_rows(path, text)), "state"
-    elif kind == "plan" or is_terraform_plan(text):
-        rows, eff = list(_plan_rows(path, text)), "plan"
+    elif kind == "plan":
+        rows, eff = list(_plan_rows(path, text, _load_plan(text))), "plan"
+    elif (plan := sniff_plan(text)) is not None:
+        rows, eff = list(_plan_rows(path, text, plan)), "plan"
     else:
         rows, eff = list(_config_rows(path, text)), "config"
     for r in rows:

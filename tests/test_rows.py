@@ -163,6 +163,20 @@ def test_plan_sniff_promotes_config_routed_file():
     assert len(rows) == 2  # still plan-parsed (utils.go:360-372 sniff)
 
 
+def test_plan_sniffed_file_parses_once(monkeypatch):
+    # the sniff's parse is reused for the rows, not repeated
+    calls = {"n": 0}
+    real = json.loads
+
+    def counting(*a, **kw):
+        calls["n"] += 1
+        return real(*a, **kw)
+
+    monkeypatch.setattr(json, "loads", counting)
+    assert _rows("config", "plan/tfplan.json") == _rows("plan", "plan/tfplan.json")
+    assert calls["n"] == 2  # one parse per build
+
+
 # -- state (table_terraform_resource.go:233-275, output.go:153-165) --
 
 
