@@ -1,9 +1,14 @@
 # Developer entry points — the verify skill and the rotation policy
 # reference these by name.
-.PHONY: test parity-sf001 parity-sf01 bench
+.PHONY: test test-reverse parity-sf001 parity-sf01 bench
 
 test:
 	python -m pytest tests/ -q
+
+# The same suite with the test files in reverse order: a plan pin must not
+# depend on what an earlier test file left in the shared session.
+test-reverse:
+	python -m pytest $$(ls tests/test_*.py | sort -r) -q
 
 # Local replica of the driver's correctness gate at the default test SF
 # (all oracled entries, order-independent).

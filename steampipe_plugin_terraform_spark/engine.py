@@ -9,7 +9,9 @@ executors, tested on local[N]):
    resolved list — works on any Hadoop FS (file:/, s3a:/, hdfs:/) and
    bin-packs many small files per partition via
    ``spark.sql.files.maxPartitionBytes`` / ``openCostInBytes``, which is the
-   right scan shape for the small-file-heavy Terraform workload.
+   right scan shape for the small-file-heavy Terraform workload. The read
+   weighs each file by its real bytes (``_binary_file_loader``), so a
+   small-file corpus parses in about one task per core.
 3. **Parse** (executors, narrow): one ``mapInPandas`` stage turns each file
    into wide rows for every table it feeds (tfcore/rows.py). One parse per
    file total — vs the reference's parse-per-table-per-query with a global
@@ -29,7 +31,7 @@ since our tables derive from one lineage).
 from __future__ import annotations
 
 import sys
-from typing import Iterator
+from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -104,6 +106,55 @@ def _normalize_path(uri: str) -> str:
             rest = rest[1:]
         return rest
     return uri
+
+
+# Per-file weight the binaryFile read bin-packs with, in bytes of content
+# (``spark.sql.files.openCostInBytes``; see _binary_file_loader).
+_FILE_OPEN_COST_BYTES = 64
+
+
+def _binary_file_loader(spark: SparkSession) -> Callable[[list[str]], DataFrame]:
+    """A ``load(paths)`` for ``spark.read.format("binaryFile")`` that packs the
+    files into tasks by their real bytes.
+
+    Spark counts every file of a scan as its length plus
+    ``spark.sql.files.openCostInBytes`` (default 4 MB) and packs the files
+    into bins of ``min(maxPartitionBytes, max(openCost, Σ weights / cores))``.
+    The parse costs almost only per byte: a serial regression over the
+    400-file benchmark corpus gave 0.7–1.0 µs/byte plus ~40 bytes' worth per
+    file. At 4 MB those 400 files (1.1 MB) split into 13 mostly tiny tasks
+    on 4 cores, each paying the Python worker's ~0.3 s set-up (SCALE.md); at
+    64 bytes they make one ~280 KB bin per core plus a small tail. The cost
+    stays above 0 so a corpus of empty files still splits, and
+    ``maxPartitionBytes`` still caps every task.
+
+    The open cost is also the floor of the split size, so setting it on the
+    caller's session would cut each small parquet input of its other scans
+    into one mostly empty range per core. Spark sizes a file scan with the
+    confs of the session that resolved the relation, so the relation is
+    resolved in a clone of the caller's session (all its confs, plus the
+    lower cost; one clone per call) and wrapped back into the caller's
+    session. Without JVM access (Spark Connect) the read keeps the caller's
+    bins.
+    """
+    jspark = getattr(spark, "_jsparkSession", None)
+    if jspark is None:
+        return spark.read.format("binaryFile").load
+    jreader = jspark.cloneSession()
+    jreader.conf().set("spark.sql.files.openCostInBytes", str(_FILE_OPEN_COST_BYTES))
+
+    def load(paths: list[str]) -> DataFrame:
+        relation = (
+            jreader.read()
+            .format("binaryFile")
+            .load(spark._jvm.PythonUtils.toSeq(paths))
+            .queryExecution()
+            .analyzed()
+            .relation()
+        )
+        return DataFrame(jspark.baseRelationToDataFrame(relation), spark)
+
+    return load
 
 
 def _make_parse_fn(on_error: str, default_kind: str = "config"):
@@ -267,17 +318,18 @@ class TerraformEngine:
         robust for remote globs the reader expands itself."""
         if files is None:
             files = self.files
-        parts = []
-        for kind in ("config", "plan", "state"):
-            paths = [p for p, k in files if k == kind]
-            if paths:
-                parts.append(
-                    self.spark.read.format("binaryFile")
-                    .load(paths)
-                    .select("path", "content", F.lit(kind).alias("file_kind"))
-                )
-        if not parts:
+        by_kind = [
+            (kind, paths)
+            for kind in ("config", "plan", "state")
+            if (paths := [p for p, k in files if k == kind])
+        ]
+        if not by_kind:
             return self.spark.createDataFrame([], "path string, content binary, file_kind string")
+        load = _binary_file_loader(self.spark)
+        parts = [
+            load(paths).select("path", "content", F.lit(kind).alias("file_kind"))
+            for kind, paths in by_kind
+        ]
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)

@@ -30,6 +30,25 @@ def spark():
     spark.stop()
 
 
+@pytest.fixture
+def restore_sql_confs(spark):
+    """Snapshot the shared session's runtime SQL confs and put them back
+    after the test. ``session.get_spark()`` re-applies its own confs to
+    the running session, so a test that calls it would otherwise leave
+    them (shuffle partitions, time zone, ...) to every later test
+    file and make plan pins depend on test order."""
+    before = spark.conf.getAll
+    yield
+    after = spark.conf.getAll
+    for key in set(before) | set(after):
+        if before.get(key) == after.get(key) or not spark.conf.isModifiable(key):
+            continue
+        if key in before:
+            spark.conf.set(key, before[key])
+        else:
+            spark.conf.unset(key)
+
+
 @pytest.fixture(scope="session")
 def fixtures_dir():
     return FIXTURES

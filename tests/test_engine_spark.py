@@ -144,6 +144,60 @@ def test_no_shuffle_in_table_scan(engine):
     assert "Exchange" not in plan
 
 
+def _file_partitions(eng) -> list[tuple[int, int]]:
+    """(files, content bytes) of each partition of the engine's read."""
+
+    def count(rows):
+        n = b = 0
+        for r in rows:
+            n += 1
+            b += len(r.content)
+        yield n, b
+
+    return eng._files_df().rdd.mapPartitions(count).collect()
+
+
+def test_small_file_scan_balances_partitions_by_bytes(spark, restore_sql_confs, tmp_path):
+    """The engine's binaryFile read bin-packs small ``.tf`` files by their
+    real bytes: about one parse task per core, not one per 32 files as
+    Spark's 4 MB per-file open cost gives. Spark packs files next-fit in
+    decreasing size, so every partition ends within one largest file above
+    bytes/cores, and every partition but the last within one largest file
+    below it. The caller's session keeps its own open cost."""
+    import random
+
+    rng = random.Random(7)
+    sizes = [rng.randint(40, 400) for _ in range(200)] + [10_000, 10_240, 9_800, 10_100]
+    for i, n in enumerate(sizes):
+        body = f'variable "v{i}" {{\n  default = "'
+        (tmp_path / f"f{i:03d}.tf").write_text(body + "x" * max(n - len(body) - 4, 0) + '"\n}\n')
+    largest = max(p.stat().st_size for p in tmp_path.iterdir())
+    total = sum(p.stat().st_size for p in tmp_path.iterdir())
+
+    open_cost = "spark.sql.files.openCostInBytes"
+    caller_open_cost = spark.conf.get(open_cost)
+    cores = spark.sparkContext.defaultParallelism
+    eng = TerraformEngine(spark, config_paths=[str(tmp_path / "*.tf")], cache=False)
+    parts = _file_partitions(eng)
+    assert sum(n for n, _ in parts) == len(sizes)
+    assert sum(b for _, b in parts) == total
+    assert len(parts) <= cores + 1, parts
+    for k, (_, b) in enumerate(parts):
+        assert b <= total / cores + largest, parts
+        assert k == len(parts) - 1 or b >= total / cores - largest, parts
+    plan = eng.table("terraform_resource")._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+    assert spark.conf.get(open_cost) == caller_open_cost
+
+    # the caller's maxPartitionBytes still caps every task that holds more
+    # than one file
+    cap = 4096
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(cap))
+    parts = _file_partitions(eng)
+    assert len(parts) > cores + 1
+    assert all(b <= cap for n, b in parts if n > 1), parts
+
+
 def test_in_list_filter(spark, engine):
     # docs/tables/terraform_resource.md:239 — type in (…)
     rows = spark.sql(

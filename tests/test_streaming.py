@@ -239,11 +239,13 @@ def test_stream_reader_adapts_to_nanos_parquet(spark, tmp_path):
     assert any("12:00:00" in k[0] for k in rows)
 
 
-def test_sessions_stream_under_rocksdb_state_store(spark):
+def test_sessions_stream_under_rocksdb_state_store(spark, restore_sql_confs):
     """round-6: the engine factory's rocksdb_state flag swaps the streaming
     state store to RocksDB (off-heap, disk-spilling — the provider a 100 TB
     deployment runs once live session keys outgrow executor heap). The
-    session-window entry must produce IDENTICAL results under it."""
+    session-window entry must produce IDENTICAL results under it.
+    ``restore_sql_confs`` puts back every SQL conf ``get_spark`` applied to
+    the shared session, the state-store key included."""
     from steampipe_plugin_terraform_spark.catalog import QUERIES
     from steampipe_plugin_terraform_spark.session import (
         ROCKSDB_STATE_PROVIDER,
@@ -253,18 +255,11 @@ def test_sessions_stream_under_rocksdb_state_store(spark):
     sf = "/root/testdata/sf0.001"
     key = "spark.sql.streaming.stateStore.providerClass"
     baseline = sorted(map(tuple, QUERIES["stream_sessions_per_user"](spark, sf).collect()))
-    prev = spark.conf.get(key, None)
-    try:
-        s2 = get_spark(rocksdb_state=True)  # same JVM session, conf applied
-        assert s2.conf.get(key) == ROCKSDB_STATE_PROVIDER
-        under_rocks = sorted(
-            map(tuple, QUERIES["stream_sessions_per_user"](s2, sf).collect())
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    s2 = get_spark(rocksdb_state=True)  # same JVM session, conf applied
+    assert s2.conf.get(key) == ROCKSDB_STATE_PROVIDER
+    under_rocks = sorted(
+        map(tuple, QUERIES["stream_sessions_per_user"](s2, sf).collect())
+    )
     assert under_rocks == baseline and len(baseline) > 0
 
 
